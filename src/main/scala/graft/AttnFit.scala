@@ -52,10 +52,13 @@ object AttnFit {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.functions.vector_to_array
+    // checkpointed, not cached: each of the up-to-50 LBFGS jobs would
+    // otherwise ship the whole upstream DAG (q85 tensor join) in its
+    // task binary
     val assembled = new VectorAssembler()
       .setInputCols(featCols.toArray).setOutputCol("fvec")
       .setHandleInvalid("keep")
-      .transform(data).cache()
+      .transform(data).localCheckpoint(eager = true)
     val model = new LogisticRegression()
       .setFeaturesCol("fvec").setLabelCol("label")
       .setMaxIter(50).setRegParam(0.01)

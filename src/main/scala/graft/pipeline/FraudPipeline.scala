@@ -25,15 +25,19 @@ import org.apache.spark.sql.functions._
   */
 object FraudPipeline {
 
-  /** `nUsers` is counted from the CACHED assembly during the run —
-    * callers report it instead of re-counting `features`, whose plan
-    * would re-execute the whole multi-tier feature DAG once the
-    * assembly cache is dropped. The assembly is the frame AFTER the
-    * inner label join with `customer`, so `nUsers` is the LABELED
-    * (trainable) user count: a feature user_id absent from the account
-    * table is not in it. On the driver testdata the two counts are
-    * equal (every events user is a customer); PipelineRun's `n_users`
-    * JSON field carries this labeled-count semantics. */
+  /** `scored` is a local checkpoint: its plan starts at the checkpoint
+    * blocks, so reading it re-runs no feature tier. `features` is the
+    * full lazy plan, and every action on it re-executes the multi-tier
+    * feature DAG.
+    *
+    * `nUsers` is counted off the checkpointed assembly during the run —
+    * callers report it instead of re-counting `features`. The assembly
+    * is the frame AFTER the inner label join with `customer`, so
+    * `nUsers` is the LABELED (trainable) user count: a feature user_id
+    * absent from the account table is not in it. On the bundled
+    * testdata the two counts are equal (every events user is a customer);
+    * PipelineRun's `n_users` JSON field carries this labeled-count
+    * semantics. */
   case class Result(features: DataFrame, scored: DataFrame,
     metrics: DataFrame, nUsers: Long)
 
@@ -218,13 +222,19 @@ object FraudPipeline {
     val withSplit = labeled.withColumn("is_train",
       ops.Exact.lcgTrain80("user_id"))
 
-    // 4. assemble + train on the train fold only. `assembled` feeds the
-    //    LBFGS iterations AND the held-out scoring pass below, so it
-    //    stays cached until `scored` has materialized from it.
+    // 4. assemble + train on the train fold only. `assembled` feeds ~23
+    //    LBFGS treeAggregate jobs AND the held-out scoring pass, so it
+    //    is materialized once and its lineage cut: a cached frame keeps
+    //    the q59 DAG, and every one of those small jobs would ship and
+    //    deserialize it in its task binary — on a 150-user input each
+    //    LBFGS job spent 97-237 ms on that against ~10 ms of task work
+    //    (README, "Cut lineage before an iterative consumer").
+    //    User-grain, like the checkpoints in ops.Graph/Fused/Components;
+    //    the ContextCleaner frees the blocks once nothing references them.
     val featCols = withFused.columns.filterNot(_ == "user_id")
     val assembler = new VectorAssembler()
       .setInputCols(featCols).setOutputCol("fvec").setHandleInvalid("keep")
-    val assembled = assembler.transform(withSplit).cache()
+    val assembled = assembler.transform(withSplit).localCheckpoint(eager = true)
     val model = new LogisticRegression()
       .setFeaturesCol("fvec").setLabelCol("label")
       .setMaxIter(20).setRegParam(0.01)
@@ -232,17 +242,17 @@ object FraudPipeline {
 
     // 5. score the held-out fold: hard prediction for the confusion
     //    suite, P(fraud) for the ranking metrics — one transform pass
-    //    read from the cache, materialized before the cache is dropped
+    //    over the checkpointed assembly, itself checkpointed so the ~20
+    //    jobs of the metric cores below (and the caller's reads of
+    //    `scored`) start from its blocks, not from the model's lineage
     val scored = model.transform(assembled.filter(!col("is_train")))
       .select(col("user_id"), col("label").cast("int").as("y"),
         col("prediction").cast("int").as("pred"),
         vector_to_array(col("probability")).getItem(1).as("score"))
-      .cache()
-    scored.count() // force: the feature assembly runs exactly once
-    // row count read off the CACHED assembly, before the cache drops —
-    // re-counting `features` later would re-execute every tier's DAG
+      .localCheckpoint(eager = true)
+    // a count of the checkpoint blocks — re-counting `features` later
+    // would re-execute every tier's DAG
     val nUsers = assembled.count()
-    assembled.unpersist()
 
     // 6. the reference's full test_model suite (new_utlis_1.py:35-50:
     //    accuracy + macro P/R/F1 + roc_auc_score + average_precision),

@@ -1,16 +1,23 @@
 package graft
 
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline: 32-slot features → split → train → the full
   * held-out test_model metric suite (reference new_utlis_1.py:35-50). */
 class PipelineSpec extends SparkSpec {
 
+  // sf0.001's held-out fold is 3 users, all one class — ROC AUC is
+  // undefined there (sklearn's roc_auc_score raises on it too); sf0.01
+  // is the smallest SF whose fold carries both classes (25 neg / 4 pos).
+  // One run shared by the sf0.01 tests below; sf0.01 sits next to `sf`.
+  private lazy val sf001 = pipeline.FraudPipeline.run(spark,
+    new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath)
+
   test("FraudPipeline trains on the full q59 matrix and emits the test_model suite") {
-    // sf0.001's held-out fold is 3 users, all one class — ROC AUC is
-    // undefined there (sklearn's roc_auc_score raises on it too); sf0.01
-    // is the smallest SF whose fold carries both classes (25 neg / 4 pos)
-    val r = pipeline.FraudPipeline.run(spark, "/root/testdata/sf0.01")
+    val r = sf001
     val nUsers = r.features.count()
     assert(nUsers > 0)
     // user_id + q19's 31 events-native features + the 4 graph slots
@@ -48,6 +55,38 @@ class PipelineSpec extends SparkSpec {
     val aucDirect = wins / (pos.length.toDouble * neg.length)
     assert(math.abs(m.getAs[Double]("auc") - aucDirect) < 1e-5,
       s"auc ${m.getAs[Double]("auc")} vs direct $aucDirect")
+  }
+
+  test("FraudPipeline cuts lineage at the model boundary and leaves no cache entry") {
+    val r = sf001
+    // `scored` reads a local checkpoint, not the q59 file scans — the
+    // metric jobs' task binaries carry no feature DAG
+    val plan = r.scored.queryExecution.analyzed
+    assert(plan.collectFirst { case l: LogicalRDD => l }.nonEmpty, plan.treeString)
+    assert(plan.collectFirst { case l: LogicalRelation => l }.isEmpty, plan.treeString)
+    // and nothing stays registered with the CacheManager after `run`
+    val cached = spark.sharedState.cacheManager
+      .lookupCachedData(r.scored.asInstanceOf[classic.Dataset[_]])
+    assert(cached.isEmpty)
+  }
+
+  test("FraudPipeline sf0.01 metric row and labeled user count are pinned") {
+    val r = sf001
+    // SparkSpec runs local(4), so partitioning — and with it the order
+    // of every LBFGS partial sum — is deterministic and the row is
+    // reproducible to the literal
+    assert(r.nUsers == 150L)
+    val expected = Seq[(String, Any)](
+      "tp" -> 0L, "fp" -> 0L, "tn" -> 25L, "fn" -> 4L,
+      "accuracy" -> 0.862069,
+      "precision_pos" -> 0.0, "recall_pos" -> 0.0,
+      "precision_neg" -> 0.862069, "recall_neg" -> 1.0,
+      "macro_precision" -> 0.431034, "macro_recall" -> 0.5,
+      "f1_pos" -> 0.0, "f1_neg" -> 0.925926, "macro_f1" -> 0.462963,
+      "auc" -> 0.47, "avg_precision" -> 0.151464)
+    val m = r.metrics.head()
+    assert(m.schema.fieldNames.toSeq == expected.map(_._1))
+    assert(m.toSeq == expected.map(_._2))
   }
 
   test("extended features add the engine's beyond-parity signals, zero-filled") {
